@@ -17,7 +17,9 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // toString, not getMessage: an NPE-style failure has a null message
+        System.err.println(s"[verify] $name failed: $e")
+        e.printStackTrace()
       }
       // the parquet write fully materialized this query; any internal
       // .cache() is dead weight from here on. Released per query so the

@@ -94,14 +94,6 @@ object CorpusOps {
     conv(substring(md5(concat(lit("graft"), id.cast("string"))), 1, 8), 16, 10)
       .cast("long") % 1000
 
-  /** Stratified Bernoulli sample: keep a row iff its [[sampleKey]] falls
-    * under the per-stratum rate (permille). Pure map-side — no shuffle, no
-    * state; at 100 TB this is a scan that keeps rate‰ of each stratum with
-    * deterministic membership.
-    */
-  def stratifiedSample(docs: DataFrame, ratePermille: Column, idCol: String = "doc_id"): DataFrame =
-    docs.filter(sampleKey(col(idCol)) < ratePermille)
-
   /** Deterministic global shuffle + shard manifest for training export:
     * every document gets a pseudo-random but fully reproducible position in
     * a sharded training order. The shuffle key is Spark's codegen'd

@@ -283,34 +283,20 @@ object MinHash {
     * after the distinct.
     *
     * NOT lazy: constructing the result materializes the signature frame
-    * eagerly (cache + count, or a parquet checkpoint when `checkpointDir`
-    * is set) so the band explode and both re-attach sides can't race to
-    * compute the same cache block; the cache stays pinned until LRU
-    * eviction.
+    * eagerly (cache + count) so the band explode and both re-attach sides
+    * can't race to compute the same cache block; the cache stays pinned
+    * until LRU eviction.
     */
   def candidatePairs(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
-                     numPerms: Int = 128, numBands: Int = 16, rowsPerBand: Int = 8,
-                     checkpointDir: Option[String] = None): DataFrame = {
+                     numPerms: Int = 128, numBands: Int = 16, rowsPerBand: Int = 8): DataFrame = {
     // The signature materialization boundary is load-bearing: the signature
     // frame is consumed three times (band explode + both sides of the
     // re-attach), and without a boundary the projection collapse would
-    // re-run the text kernel per consumer. Default = JVM cache (harness
-    // scale); `checkpointDir` = write-to-parquet + re-read, the 100 TB path
-    // where the signature set outgrows executor storage memory — nothing is
-    // then pinned in cache at all.
-    val sigRaw = withSignatures(docs, textCol, idCol, numPerms)
-    val sigd = checkpointDir match {
-      case Some(dir) =>
-        sigRaw.write.mode("overwrite").parquet(dir)
-        docs.sparkSession.read.parquet(dir)
-      case None =>
-        // eager, not lazy: three subtrees of one downstream action consume
-        // this frame (band explode + both re-attach sides); a lazy cache
-        // lets them race and re-run the text kernel concurrently
-        val cached = sigRaw.cache()
-        cached.count()
-        cached
-    }
+    // re-run the text kernel per consumer. Eager, not lazy: a lazy cache
+    // lets the three subtrees of one downstream action race and re-run the
+    // text kernel concurrently.
+    val sigd = withSignatures(docs, textCol, idCol, numPerms).cache()
+    sigd.count()
     // (band, bandHash) packed into ONE long — band in the high 32 bits,
     // the murmur3 band hash zero-extended in the low 32 — so the bucket
     // key is injective, the shuffle carries two longs per row instead of
@@ -320,21 +306,13 @@ object MinHash {
     // eagerly (scalars only: id + key) so the self-join's two sides read
     // it from cache instead of each re-running the explode over the
     // signature arrays (measured ~2× the band-stage cost at 500k docs).
-    val bandedRaw = sigd
+    val banded = sigd
       .select(col("id"), explode(bands(col("sig"), numBands, rowsPerBand)).as("b"))
       .select(col("id"),
         (shiftleft(col("b.band").cast("long"), 32) bitwiseOR
           (col("b.band_hash").cast("long") bitwiseAND lit(0xFFFFFFFFL))).as("bk"))
-    val banded = checkpointDir match {
-      case Some(dir) =>
-        val bdir = dir + "_bands"
-        bandedRaw.write.mode("overwrite").parquet(bdir)
-        docs.sparkSession.read.parquet(bdir)
-      case None =>
-        val cached = bandedRaw.cache()
-        cached.count()
-        cached
-    }
+      .cache()
+    banded.count()
     val a = banded.select(col("bk").as("bk_a"), col("id").as("id_a"))
     val bd = banded.select(col("bk").as("bk_b"), col("id").as("id_b"))
     val idPairs = a.join(bd, col("bk_a") === col("bk_b") && col("id_a") < col("id_b"))

@@ -152,16 +152,11 @@ object Similarity {
     * cache boundary's columnar encoding of array columns costs more than
     * the entire downstream join (measured 2.0 s of a 2.7 s query at bench
     * scale). Embeddings re-attach from the input frame (one row per id)
-    * only where exact scoring needs them. Default = JVM cache (harness
-    * scale); `checkpointDir` = write-parquet + re-read, mirroring
-    * [[MinHash.candidatePairs]] — the 100 TB path where even the scalar
-    * frame outgrows executor storage memory. The cached frame lives until
+    * only where exact scoring needs them. The cached frame lives until
     * LRU eviction (the consumer's plan holds it; there is no safe point to
-    * unpersist inside a lazy operator) — long-lived sessions doing many LSH
-    * calls should prefer `checkpointDir`, which leaves nothing pinned.
+    * unpersist inside a lazy operator).
     */
-  private[graft] def bucketedFrame(vectors: DataFrame, bits: Int, tables: Int,
-                            checkpointDir: Option[String]): DataFrame = {
+  private[graft] def bucketedFrame(vectors: DataFrame, bits: Int, tables: Int): DataFrame = {
     // one native pass computes every table's bucket (posexplode position =
     // table index, matching the former lit(t) struct layout exactly). A
     // NULL embedding gets bucket 0 in every table — the expression-spec
@@ -171,19 +166,13 @@ object Similarity {
         coalesce(VectorExprs.signBuckets(col("embedding"), bits, tables),
           array_repeat(lit(0L), tables)).as("bks"))
       .select(col("vec_id"), posexplode(col("bks")).as(Seq("table", "bucket")))
-    checkpointDir match {
-      case Some(dir) =>
-        raw.write.mode("overwrite").parquet(dir)
-        vectors.sparkSession.read.parquet(dir)
-      case None =>
-        // materialize EAGERLY: the frame feeds both sides of a self-join in
-        // ONE downstream action, and a lazy cache lets the two sides race to
-        // compute it concurrently (observed as "Block already exists"
-        // recompute warnings and ~2× the bucketing cost at bench scale)
-        val cached = raw.cache()
-        cached.count()
-        cached
-    }
+    // materialize EAGERLY: the frame feeds both sides of a self-join in
+    // ONE downstream action, and a lazy cache lets the two sides race to
+    // compute it concurrently (observed as "Block already exists"
+    // recompute warnings and ~2× the bucketing cost at bench scale)
+    val cached = raw.cache()
+    cached.count()
+    cached
   }
 
   /** Approximate top-k: candidate id pairs share an LSH bucket (scalar
@@ -193,15 +182,13 @@ object Similarity {
     * over `tables` seeds).
     *
     * NOT lazy: building the returned DataFrame runs the bucketing job
-    * eagerly (cache + count, or a parquet checkpoint when `checkpointDir`
-    * is set) to stop the self-join's two sides racing to materialize the
-    * same cache block. Callers constructing plans without executing them
-    * still pay the bucketing cost, and the cache stays pinned until LRU
-    * eviction.
+    * eagerly (cache + count) to stop the self-join's two sides racing to
+    * materialize the same cache block. Callers constructing plans without
+    * executing them still pay the bucketing cost, and the cache stays
+    * pinned until LRU eviction.
     */
-  def lshTopK(vectors: DataFrame, k: Int = 5, bits: Int = 12, tables: Int = 2,
-              checkpointDir: Option[String] = None): DataFrame = {
-    val bucketed = bucketedFrame(vectors, bits, tables, checkpointDir)
+  def lshTopK(vectors: DataFrame, k: Int = 5, bits: Int = 12, tables: Int = 2): DataFrame = {
+    val bucketed = bucketedFrame(vectors, bits, tables)
     val a = bucketed.select(col("table"), col("bucket"), col("vec_id").as("query_id"))
     val b = bucketed.select(col("table"), col("bucket"), col("vec_id").as("neighbor_id"))
     val cand = a.join(b, Seq("table", "bucket"))
@@ -238,11 +225,11 @@ object Similarity {
     * [[lshTopK]] — same cache-race rationale, same pinned-cache tradeoff).
     */
   def dedupByCosineLsh(vectors: DataFrame, threshold: Double, bits: Int = 8,
-                       tables: Int = 4, checkpointDir: Option[String] = None): DataFrame = {
+                       tables: Int = 4): DataFrame = {
     // exactly-once candidates via the first-colliding-table filter (r18;
     // see lshCandidatePairsDeduped) — the downstream __dup distinct is
     // indifferent to emission multiplicity, so output is unchanged
-    val candidates = lshCandidatePairsDeduped(vectors, bits, tables, checkpointDir)
+    val candidates = lshCandidatePairsDeduped(vectors, bits, tables)
     // re-attach embeddings from the INPUT frame (one row per id) — a
     // distinct over the bucketed frame would shuffle the arrays ×tables —
     // with each vector's norm computed ONCE here, not per candidate pair
@@ -257,6 +244,16 @@ object Similarity {
     vectors.join(dups, vectors("vec_id") === dups("__dup"), "left_anti")
   }
 
+  /** Byte budget for broadcasting the (vec_id, embedding, nrm) frame in
+    * [[nearDupPairsLsh]]'s verify stage — estimate `rows × (dims·8 B + 64)`;
+    * past it the attach falls back to a shuffled join instead of failing at
+    * Spark's 8 GB broadcast ceiling. Session config, not a constant (the
+    * [[graft.functions.PrefixJoin.BroadcastBytesKey]] convention): a real
+    * cluster sizes it to executor memory.
+    */
+  val NearDupBroadcastBytesKey = "spark.graft.nearDupPairs.broadcastMaxBytes"
+  private val NearDupBroadcastBytesDefault = 1600000000L
+
   /** Candidate-verified near-dup PAIRS through LSH buckets — the pair-list
     * form of [[dedupByCosineLsh]] for consumers that need the ε-graph
     * itself (e.g. [[Dbscan.cluster]]): candidates from shared
@@ -268,24 +265,12 @@ object Similarity {
     * misses a grazing edge with p ≈ 3e-6 while verifying only ~bucket-local
     * candidates instead of all pairs.
     */
-  /** Byte budget for broadcasting the (vec_id, embedding, nrm) frame in
-    * [[nearDupPairsLsh]]'s verify stage — estimate `rows × (dims·8 B + 64)`;
-    * past it the attach falls back to a shuffled join instead of failing at
-    * Spark's 8 GB broadcast ceiling. Session config, not a constant (the
-    * [[graft.functions.PrefixJoin.BroadcastBytesKey]] convention): a real
-    * cluster sizes it to executor memory.
-    */
-  val NearDupBroadcastBytesKey = "spark.graft.nearDupPairs.broadcastMaxBytes"
-  private val NearDupBroadcastBytesDefault = 1600000000L
-
   def nearDupPairsLsh(vectors: DataFrame, threshold: Double, bits: Int = 12,
-                      tables: Int = 64, checkpointDir: Option[String] = None): DataFrame =
-    verifyCandidatePairs(vectors,
-      lshCandidatePairsDeduped(vectors, bits, tables, checkpointDir), threshold)
+                      tables: Int = 64): DataFrame =
+    verifyCandidatePairs(vectors, lshCandidatePairsDeduped(vectors, bits, tables), threshold)
 
   /** Distinct 16-B candidate id pairs from a bucketed (table, bucket,
-    * vec_id) frame — the self-join stage of [[nearDupPairsLsh]], exposed
-    * for stage-level profiling ([[graft.tools.ProfileDbscan]]) and as the
+    * vec_id) frame — the self-join stage of [[nearDupPairsLsh]], and the
     * fallback when the bucket-vector frame outgrows its broadcast budget
     * (see [[lshCandidatePairsDeduped]]).
     */
@@ -326,24 +311,17 @@ object Similarity {
     * bucket-vector broadcast budget the stage falls back to the old
     * distinct form — identical output either way.
     */
-  private[graft] def lshCandidatePairsDeduped(vectors: DataFrame, bits: Int, tables: Int,
-                                              checkpointDir: Option[String]): DataFrame = {
+  private[graft] def lshCandidatePairsDeduped(vectors: DataFrame, bits: Int,
+                                              tables: Int): DataFrame = {
     // one native pass computes every table's bucket; NULL embedding →
     // bucket 0 in every table (the bucketedFrame convention, see its note)
     val pre = vectors.select(col("vec_id"),
       coalesce(VectorExprs.signBuckets(col("embedding"), bits, tables),
         array_repeat(lit(0L), tables)).as("bks"))
-    val (perId, n) = checkpointDir match {
-      case Some(dir) =>
-        pre.write.mode("overwrite").parquet(dir)
-        val back = vectors.sparkSession.read.parquet(dir)
-        (back, back.count())
-      case None =>
-        // eager for the same reason as bucketedFrame: both self-join sides
-        // (and the broadcast build) consume it in one downstream action
-        val cached = pre.cache()
-        (cached, cached.count())
-    }
+    // eager for the same reason as bucketedFrame: both self-join sides
+    // (and the broadcast build) consume it in one downstream action
+    val perId = pre.cache()
+    val n = perId.count()
     val exploded = perId
       .select(col("vec_id"), posexplode(col("bks")).as(Seq("table", "bucket")))
     val budget = vectors.sparkSession.conf
@@ -424,8 +402,8 @@ object Similarity {
     }
   }
 
-  private[graft] def verifyCandidatePairs(vectors: DataFrame, candidates: DataFrame,
-                                          threshold: Double): DataFrame = {
+  private def verifyCandidatePairs(vectors: DataFrame, candidates: DataFrame,
+                                   threshold: Double): DataFrame = {
     val embPlain =
       vectors.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
     val maxBytes = vectors.sparkSession.conf
@@ -480,16 +458,14 @@ object Similarity {
     * [[dedupByCosine]]/[[dedupByCosineLsh]].
     *
     * NOT lazy: the probe-list frame feeds both sides of a self-join in one
-    * downstream action, so it materializes eagerly (cache + count, or a
-    * parquet checkpoint when `checkpointDir` is set) — the same cache-race
-    * rationale as [[bucketedFrame]].
+    * downstream action, so it materializes eagerly (cache + count) — the
+    * same cache-race rationale as [[bucketedFrame]].
     */
   def semanticDedup(vectors: DataFrame, threshold: Double, nlist: Int = 16,
-                    nprobe: Int = 2, iters: Int = 5,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    nprobe: Int = 2, iters: Int = 5): DataFrame = {
     val cents = kmeansCentroids(vectors, nlist, iters)
     val centDf = centroidTable(vectors.sparkSession, cents)
-    val probesRaw = vectors
+    val probes = vectors
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
       .join(broadcast(centDf))
@@ -498,15 +474,8 @@ object Similarity {
         VectorExprs.l2Sq(col("embedding"), col("__cent")).as("d"),
         col("__list_id").as("i")))), 1, nprobe).as("__near"))
       .select(col("vec_id"), explode(expr("transform(__near, s -> s.i)")).as("list"))
-    val probes = checkpointDir match {
-      case Some(dir) =>
-        probesRaw.write.mode("overwrite").parquet(dir)
-        vectors.sparkSession.read.parquet(dir)
-      case None =>
-        val cached = probesRaw.cache()
-        cached.count()
-        cached
-    }
+      .cache()
+    probes.count()
     val a = probes.select(col("list"), col("vec_id").as("id_a"))
     val b = probes.select(col("list"), col("vec_id").as("id_b"))
     val candidates = a.join(b, Seq("list"))

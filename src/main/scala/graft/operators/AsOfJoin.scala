@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,11 +93,4 @@ object AsOfJoin {
     carried.filter(col("__side") === 1)
       .select(leftCols.map(col) ++ payload.map(col): _*)
   }
-
-  /** Convenience: plain range filter join (J3's range form) for small right
-    * sides — broadcast + filter; used where the window form's union cost
-    * exceeds the broadcast.
-    */
-  def rangeJoin(left: DataFrame, right: DataFrame, keys: Column, range: Column): DataFrame =
-    left.join(broadcast(right), keys && range)
 }

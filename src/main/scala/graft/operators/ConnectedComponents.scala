@@ -55,16 +55,6 @@ object ConnectedComponents {
       .union(mins.select(col("a"), col("__m").as("b")))
   }
 
-  /** (id, component) for every node appearing in `edges` (two long columns
-    * named a, b); component = the minimum node id reachable. Deterministic.
-    *
-    * Each round MUST truncate lineage (eager localCheckpoint): a star step
-    * references its input four times (two unions + a join), so an uncut
-    * logical plan grows ~4^rounds and Catalyst analysis — not the data —
-    * becomes the bottleneck by round ten. localCheckpoint keeps the edge
-    * frame distributed; swap in `checkpoint` (reliable storage) for runs
-    * where losing an executor mid-iteration must be recoverable.
-    */
   /** Star-rounds taken by the most recent [[components]] call on this JVM —
     * a measurement hook for the scale bench (rounds-to-fixpoint is THE
     * scaling number for CC: work is rounds × edge shuffles, and
@@ -81,6 +71,16 @@ object ConnectedComponents {
   @volatile var lastObservedFingerprints: Int = 0
   @volatile var lastFallbackFingerprints: Int = 0
 
+  /** (id, component) for every node appearing in `edges` (two long columns
+    * named a, b); component = the minimum node id reachable. Deterministic.
+    *
+    * Each round MUST truncate lineage (eager localCheckpoint): a star step
+    * references its input four times (two unions + a join), so an uncut
+    * logical plan grows ~4^rounds and Catalyst analysis — not the data —
+    * becomes the bottleneck by round ten. localCheckpoint keeps the edge
+    * frame distributed; swap in `checkpoint` (reliable storage) for runs
+    * where losing an executor mid-iteration must be recoverable.
+    */
   def components(edges: DataFrame, maxIters: Int = 50): DataFrame = {
     // (count, Σa, Σb) fingerprint with ZERO extra actions per round (r17):
     // the metrics ride the round's own checkpoint materialization as an

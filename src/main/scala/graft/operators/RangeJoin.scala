@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * `points.join(intervals, ts >= start && ts < end)` has no equi-key, so
   * Catalyst plans a BroadcastNestedLoopJoin (or a cartesian product), which
   * is O(|points|·|intervals|) work and a broadcast of a whole side —
-  * unusable when both sides scale. [[AsOfJoin.rangeJoin]] embraces that for
+  * unusable when both sides scale. A broadcast filter join is fine for
   * genuinely small interval sides; this operator is the large-large path.
   *
   * Bucket-replication rewrite: discretize time into `bucketSeconds` buckets;

@@ -182,27 +182,6 @@ object SuffixArray {
     }
   }
 
-  /** Plan-evidence hook (graft.Profile `sa-round`): explain round 1's
-    * partner-fetch + re-rank under the session's current partner budget —
-    * the per-round plan is invisible in [[build]]'s final explain because
-    * every round ends at a localCheckpoint boundary.
-    */
-  private[graft] def explainRound1(docs: DataFrame, textCol: String = "text",
-                                   idCol: String = "doc_id"): Unit = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-        posexplode(split(graft.functions.TextOps.normalized(col(textCol)), " ")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("tok"))
-    val ranked = rankBy(toks, Seq("tok"))
-      .select(col("doc_id"), col("pos"), col("__rank").as("rank"))
-      .localCheckpoint(true)
-    val maxBroadcast = docs.sparkSession.conf
-      .getOption(PartnerBroadcastBytesKey).map(_.toLong)
-      .getOrElse(PartnerBroadcastBytesDefault)
-    val shiftByWindow = ranked.count() * 24L > maxBroadcast
-    rankBy(partnerFetch(ranked, 1, shiftByWindow), Seq("rank", "rank2"))
-      .explain("formatted")
-  }
-
   /** Duplicated fixed-width window positions — the operational dedup output
     * of the exact index (Lee et al. 2021's suffix-array step). A position
     * (doc, pos) hosts a duplicated `k`-token window iff its window's

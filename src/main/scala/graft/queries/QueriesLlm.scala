@@ -779,7 +779,7 @@ object QueriesLlm {
   /** The (cluster_rep, n_core, n_border, n_members, sum_members) rollup +
     * cluster_rep = −1 noise row shared by both DBSCAN rows.
     */
-  private[graft] def dbscanRollup(base: DataFrame, members: DataFrame): DataFrame = {
+  private def dbscanRollup(base: DataFrame, members: DataFrame): DataFrame = {
     val clusters = members.groupBy(col("cluster").as("cluster_rep"))
       .agg(sum(col("is_core").cast("long")).as("n_core"),
         sum((!col("is_core")).cast("long")).as("n_border"),
@@ -804,8 +804,7 @@ object QueriesLlm {
     * from the corpus row count and tables from the measured equal-recall
     * exponent instead of a hardcoded point.
     *
-    * Arithmetic (constants MEASURED in the r16 sf10 profile,
-    * `scripts/profile_dbscan_geometry.sh`):
+    * Arithmetic (constants MEASURED in the r16 sf10 stage profile):
     *  - per-hyperplane grazing-edge agreement p = 0.866 at ε = 0.9
     *    (θ ≈ 0.42 rad);
     *  - equal-recall miss exponent E = tables × p^bits held at 11.38 —
@@ -1460,7 +1459,7 @@ object QueriesLlm {
     * — via [[OracleHash]], so the candidate SET (not an idealized all-pairs
     * stand-in) is what the gate hash-checks.
     */
-  private[graft] def incrementalFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def incrementalFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, dir)
     requireIdHeadroom(docs, "doc_id", 2000000L)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
@@ -1481,7 +1480,7 @@ object QueriesLlm {
     * admission re-scans the corpus for NEITHER leg) — the stages the two
     * variants build differently.
     */
-  private[graft] def incrementalClassify(batch: DataFrame, corpus: DataFrame,
+  private def incrementalClassify(batch: DataFrame, corpus: DataFrame,
                                   cand: DataFrame,
                                   fpIndex: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window

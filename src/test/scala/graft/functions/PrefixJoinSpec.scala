@@ -53,7 +53,12 @@ class PrefixJoinSpec extends SparkSpec {
         val len = 1 + rnd.nextInt(14)
         (id.toLong, Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
       }
-      assert(engine(docs, 0.8) === bruteForce(docs, 0.8), s"seed $seed")
+      val expected = bruteForce(docs, 0.8)
+      assert(engine(docs, 0.8) === expected, s"seed $seed")
+      // budget 0: shuffled (SMJ) set attach with the early-terminated verify
+      spark.conf.set(PrefixJoin.BroadcastBytesKey, "0")
+      try assert(engine(docs, 0.8) === expected, s"seed $seed, shuffled verify")
+      finally spark.conf.unset(PrefixJoin.BroadcastBytesKey)
     }
   }
 
